@@ -17,8 +17,10 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Relational.q1(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** One entry per implemented operator from SURVEY.md §2. Merged once:
+    * every module map is itself a constant.
+    */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.queries.Relational.queries ++
       graft.queries.Joins.queries ++
       graft.queries.Windows.queries ++
@@ -33,7 +35,7 @@ object SparkEntry {
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check.
     */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     graft.queries.Relational.oracleSql ++
       graft.queries.Joins.oracleSql ++
       graft.queries.Windows.oracleSql ++

@@ -16,19 +16,9 @@ import org.apache.spark.sql.functions._
   *   union of the pair query with its swap re-executes the whole
   *   upstream subtree per branch (measured ~2× the pair-join cost);
   *   explode emits (a,b) and (b,a) from each row instead.
-  * - localCheckpoint each round: the round-k plan references the
-  *   round-(k−1) frame several times (edges side, jump side, union),
-  *   so without lineage truncation the logical tree — which Catalyst
-  *   re-analyzes in full even when caches cover execution — grows
-  *   exponentially with rounds (measured: 136 s at sf0.01 from
-  *   analysis alone). eager=false folds materialization into the
-  *   convergence aggregate's job — one Spark job per round.
-  * - checkpoint-then-persist: the persisted InMemoryRelation reports
-  *   accurate size stats once the convergence aggregate materializes
-  *   it, so Catalyst auto-broadcasts the (small) label table into the
-  *   next round's joins. No forced broadcast() hint: if the label
-  *   table ever outgrows the threshold (billions of near-dup nodes),
-  *   the joins degrade to shuffles on their own.
+  * - Per-round state is [[Fixpoint.checkpoint]]ed (lineage truncation,
+  *   one job per round, and the accurate size stats that let Catalyst
+  *   auto-broadcast the small label table into the next round's joins).
   * - Labels only ever DECREASE, so the label sum is strictly monotone
   *   until the fixpoint — convergence is one tiny aggregate per round
   *   instead of a join-and-count against the previous round.
@@ -55,46 +45,33 @@ object Cc {
     // neighbors) — the groupBy that would otherwise just distinct the
     // node ids computes the neighbor min for free, saving one full
     // propagation round of fixed job overhead.
-    var labels = edges.groupBy(col("id_a").as("id"))
+    val init = Fixpoint.checkpoint(edges.groupBy(col("id_a").as("id"))
       .agg(min(col("id_b")).as("nmin"))
-      .select(col("id"), least(col("id"), col("nmin")).as("label"))
-      .localCheckpoint(eager = false)
-      .persist()
+      .select(col("id"), least(col("id"), col("nmin")).as("label")))
     // coalesce: sum over zero rows is NULL — an input with no pairs
     // must yield an empty result, not an NPE.
     def labelSum(df: DataFrame): Long =
       df.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0)
-    var prevSum = labelSum(labels)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < 30) {
-      val viaEdges = labels
-        .join(edges, col("id") === col("id_a"))
-        .select(col("id_b").as("id"), col("label"))
-      // label(label): labels always point at real node ids (min over
-      // ids in the component so far), so the self-join is total.
-      val jmap = labels.select(col("id").as("jid"), col("label").as("jlabel"))
-      val viaJump = labels.join(jmap, col("label") === col("jid"))
-        .select(col("id"), col("jlabel").as("label"))
-      val next = viaEdges.unionByName(viaJump).unionByName(labels)
-        .groupBy("id")
-        .agg(min(col("label")).as("label"))
-        .localCheckpoint(eager = false)
-        .persist()
-      val s2 = labelSum(next) // materializes the cache → stats for k+1
-      converged = s2 == prevSum
-      prevSum = s2
-      labels.unpersist()
-      labels = next
-      rounds += 1
+    // State: (labels, label sum, sum unchanged by the last round).
+    val ((labels, _, _), _) = Fixpoint.run(s"$what: min-label propagation",
+        30, "emission would be a partial (split) clustering")(
+        (init, labelSum(init), false))(_._3, _._1.unpersist()) {
+      case (labels, prevSum, _) =>
+        val viaEdges = labels
+          .join(edges, col("id") === col("id_a"))
+          .select(col("id_b").as("id"), col("label"))
+        // label(label): labels always point at real node ids (min over
+        // ids in the component so far), so the self-join is total.
+        val jmap = labels.select(col("id").as("jid"), col("label").as("jlabel"))
+        val viaJump = labels.join(jmap, col("label") === col("jid"))
+          .select(col("id"), col("jlabel").as("label"))
+        val next = Fixpoint.checkpoint(viaEdges.unionByName(viaJump)
+          .unionByName(labels)
+          .groupBy("id")
+          .agg(min(col("label")).as("label")))
+        val s2 = labelSum(next) // materializes the cache → stats for k+1
+        (next, s2, s2 == prevSum)
     }
-    // An unconverged fixpoint must fail loudly: a partial propagation
-    // would emit labels that are upper bounds, i.e. a WRONG (split)
-    // clustering, and only the gate harness's hash — not a standalone
-    // caller — would notice.
-    require(converged,
-      s"$what: min-label propagation did not converge in $rounds rounds" +
-        " — emission would be a partial (split) clustering")
     edges.unpersist()
     labels
   }

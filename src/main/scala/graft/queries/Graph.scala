@@ -140,11 +140,11 @@ object Graph {
       memoKey: String): Louvain10Art = {
       val und = undirectedEdges(s, d, 10)
         .persist()
-      val adj = und.select(col("u").as("i"), col("v").as("j"))
-        .unionByName(und.select(col("v").as("i"), col("u").as("j")))
-        .localCheckpoint(eager = false).persist() // probed every round
-      val deg = adj.groupBy("i").agg(count(lit(1)).as("ki"))
-        .localCheckpoint(eager = false).persist() // static
+      val adj = Fixpoint.checkpoint( // probed every round
+        und.select(col("u").as("i"), col("v").as("j"))
+          .unionByName(und.select(col("v").as("i"), col("u").as("j"))))
+      val deg = Fixpoint.checkpoint( // static
+        adj.groupBy("i").agg(count(lit(1)).as("ki")))
       val m = und.agg(count(lit(1))).head().getLong(0) // O(1), read once
       def sweep(lab: DataFrame): DataFrame = {
         val kin = adj.join(lab.select(col("i").as("j"), col("c")), "j")
@@ -192,46 +192,36 @@ object Graph {
             .cast(DoubleType), 6))
           .head().getDouble(0)
       }
-      var prevBase = deg.select(col("i"), pmod(col("i"), lit(64)).as("c"))
-        .localCheckpoint(eager = false).persist()
-      var prevLab = prevBase // lab_{k-1}: view over the PERSISTED frame
-      var prevQ = modularity(prevLab)
-      var grand: DataFrame = null // lab_{k-2} backing, safe to release
-      var rounds = 0
-      var dipped = false
-      while (!dipped && rounds < 40) {
-        val nxt = sweep(prevLab)
-          .localCheckpoint(eager = false).persist()
-        // The round's ONE action materializes nxt and reads its Q.
-        val q = modularity(nxt)
-        dipped = q <= prevQ
-        if (!dipped) {
-          // nxt improved: it becomes lab_{k-1}; the grandparent frame
-          // is dead (never unpersist a frame a live view still reads —
-          // a localCheckpoint's blocks ARE its lineage).
-          if (grand != null) grand.unpersist()
-          grand = prevBase
-          prevBase = nxt
-          prevLab = nxt
-          prevQ = q
-        } else nxt.unpersist() // the dip round's partition is discarded
-        rounds += 1
+      val lab0 = Fixpoint.checkpoint(
+        deg.select(col("i"), pmod(col("i"), lit(64)).as("c")))
+      // State: (best partition, its Q, the partition it replaced, dipped).
+      // The replaced partition is released one improvement later, when
+      // its successor is superseded in turn (never unpersist a frame a
+      // live view still reads — a localCheckpoint's blocks ARE its
+      // lineage); the dip round's partition is discarded at once.
+      val ((lab, q, _, _), rounds) = Fixpoint.run(
+          "graph_louvain_converged: Q-monotone sweep", 40,
+          "raise the cap; emitting a mid-ascent partition would " +
+            "under-report the refinement")(
+          (lab0, modularity(lab0), Option.empty[DataFrame], false))(
+          _._4, _._3.foreach(_.unpersist())) {
+        case (lab, q, _, _) =>
+          val nxt = Fixpoint.checkpoint(sweep(lab))
+          // The round's ONE action materializes nxt and reads its Q.
+          val qn = modularity(nxt)
+          if (qn > q) (nxt, qn, Some(lab), false)
+          else { nxt.unpersist(); (lab, q, None, true) }
       }
-      require(dipped,
-        s"graph_louvain_converged: Q still strictly improving after " +
-          s"$rounds sweeps (Q=$prevQ) — raise the cap; emitting a " +
-          "mid-ascent partition would under-report the refinement")
-      if (grand != null) grand.unpersist()
       // Fixpoint reached: persist the artifact as a parquet label
       // table (node-sized = corpus-proportional, so never driver
       // memory — r12 review), release everything, emit the read-back.
       val labPath = graft.Tables.scratch(s,
         "artlouv10" + graft.Tables.md5hex(memoKey).take(12), d)
-      prevLab.select(col("i"), col("c")).write.mode("overwrite")
+      lab.select(col("i"), col("c")).write.mode("overwrite")
         .parquet(labPath)
-      prevBase.unpersist()
+      lab.unpersist()
       adj.unpersist(); deg.unpersist(); und.unpersist()
-      Louvain10Art(labPath, prevQ, rounds - 1) // last round was the dip
+      Louvain10Art(labPath, q, rounds - 1) // last round was the dip
   }
 
   /** The lineitem-derived co-occurrence WITNESS GRAPHS every graph
@@ -346,10 +336,10 @@ object Graph {
         .distinct()
       val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
       val wed = edges.join(outdeg, "src").persist() // static, probed every round
-      val nodes = wed.select(lit("s").as("ntype"), col("src").as("node_id")).distinct()
+      val nodes = Fixpoint.checkpoint(wed
+        .select(lit("s").as("ntype"), col("src").as("node_id")).distinct()
         .unionByName(
-          wed.select(lit("p").as("ntype"), col("dst").as("node_id")).distinct())
-        .localCheckpoint(eager = false).persist()
+          wed.select(lit("p").as("ntype"), col("dst").as("node_id")).distinct()))
       val n = nodes.count().toDouble
       // One row per round: exact dangling mass (next round's D) and the
       // change fingerprint. Both exact decimal sums -> deterministic.
@@ -372,13 +362,12 @@ object Graph {
           // sum while per-node Σ|c| < 9e6 (c ≤ q ≤ total mass / node —
           // holds for graphs to ~10⁹ in-edges per node at q ≤ 1e-3·n).
           .agg(lsum(col("c"), 9).as("msum"))
-        nodes.join(contrib,
+        Fixpoint.checkpoint(nodes.join(contrib,
             col("ntype") === lit("p") && col("node_id") === col("dst"), "left")
           .select(col("ntype"), col("node_id"),
             round(lit(0.15) + lit(0.85) *
               (coalesce(col("msum"), lit(0.0)) + lit(dOverN)), 4)
-              .as("q"))
-          .localCheckpoint(eager = false).persist()
+              .as("q")))
       }
       // Quantized q compares EXACTLY (every value is round(·, 4)), so
       // the certificate is a changed-row count, not an epsilon test.
@@ -388,23 +377,18 @@ object Graph {
             Seq("ntype", "node_id"))
           .filter(col("qa") =!= col("qb"))
           .agg(count(lit(1))).head().getLong(0)
-      var q = nodes.select(col("ntype"), col("node_id"), lit(1.0).as("q"))
-        .localCheckpoint(eager = false).persist()
-      var (dmass, fp) = scalars(q)
-      var rounds = 0
-      var converged = false
-      while (!converged && rounds < 100) {
-        val next = step(q, dmass / n)
-        val (d2, fp2) = scalars(next) // the round's ONE job
-        converged = fp2 == fp
-        dmass = d2; fp = fp2
-        q.unpersist()
-        q = next
-        rounds += 1
+      val q0 = Fixpoint.checkpoint(
+        nodes.select(col("ntype"), col("node_id"), lit(1.0).as("q")))
+      val (dmass0, fp0) = scalars(q0)
+      // State: (q, dangling mass, fingerprint, fingerprint unchanged).
+      val ((q, dmass, _, _), _) = Fixpoint.run("graph_pagerank_converged",
+          100, "emission would be a truncated, non-converged vector")(
+          (q0, dmass0, fp0, false))(_._4, _._1.unpersist()) {
+        case (q, dmass, fp, _) =>
+          val next = step(q, dmass / n)
+          val (d2, fp2) = scalars(next) // the round's ONE job
+          (next, d2, fp2, fp2 == fp)
       }
-      require(converged,
-        s"graph_pagerank_converged: no stationary point in $rounds rounds" +
-          " — emission would be a truncated, non-converged vector")
       // EXACT certificate: fingerprint equality is probabilistic; one
       // more round + exact row compare proves a genuine fixed point.
       val cert = step(q, dmass / n)
@@ -465,8 +449,8 @@ object Graph {
       // Scale shape per round: two O(edges) key shuffles (authority
       // sum by dst, hub sum by src), map-side combine bounding every
       // task's emission by its distinct-key count; the state stays on
-      // the executors (drivers see 3 scalars). localCheckpoint per
-      // round truncates lineage (the ccLabels necessity measurement).
+      // the executors (drivers see 3 scalars). Per-round state is
+      // Fixpoint.checkpoint'ed.
       //
       // ARTIFACT MEMO (round 12): the converged hub/authority vector
       // is the shipped crawl-seeding prior — trained once per dataset
@@ -493,46 +477,40 @@ object Graph {
         def unpersist(): Unit = { aRaw.unpersist(); hRaw.unpersist(): Unit }
       }
       def step(hubQ: DataFrame): Round = {
-        val aRaw = edges.join(hubQ, "src")
+        val aRaw = Fixpoint.checkpoint(edges.join(hubQ, "src")
           .groupBy("dst")
           // Exact long capture (Tables.lsum): qh is 1e-4-quantized in
           // [0,1], so per-node Σ|qh| < 9e9 holds to ~9 billion in-edges.
           .agg(lsum(col("qh"), 6).as("raw"))
-          .withColumnRenamed("dst", "node_id")
-          .localCheckpoint(eager = false).persist()
+          .withColumnRenamed("dst", "node_id"))
         val r1 = aRaw.agg(max(col("raw")).as("ma"), fpCol).head()
         val (ma, fp) = (r1.getDouble(0), r1.getDecimal(1))
         val aQ = aRaw.select(col("node_id"),
           round(col("raw") / lit(ma), 4).as("q"))
-        val hRaw = edges
+        val hRaw = Fixpoint.checkpoint(edges
           .join(aQ.select(col("node_id").as("dst"), col("q").as("qa")), "dst")
           .groupBy("src")
           .agg(lsum(col("qa"), 6).as("raw"))
-          .withColumnRenamed("src", "node_id")
-          .localCheckpoint(eager = false).persist()
+          .withColumnRenamed("src", "node_id"))
         val mh = hRaw.agg(max(col("raw"))).head().getDouble(0)
         Round(aRaw, hRaw, ma, mh, fp)
       }
-      var hubQ = edges.select(col("src")).distinct()
-        .select(col("src"), lit(1.0).as("qh"))
-      var last: Round = null
-      var rounds = 0
-      var converged = false
-      while (!converged && rounds < 60) {
-        val r = step(hubQ)
-        converged = last != null && r.fp == last.fp && r.ma == last.ma &&
-          r.mh == last.mh
-        hubQ = r.hSide.select(col("node_id").as("src"), col("q").as("qh"))
-        if (last != null) last.unpersist()
-        last = r
-        rounds += 1
+      def hubs(r: Round): DataFrame =
+        r.hSide.select(col("node_id").as("src"), col("q").as("qh"))
+      // State: (last round — None before the first, stationary). A
+      // round is stationary when fingerprint and both maxima repeat.
+      val ((Some(last), _), _) = Fixpoint.run("graph_hits_converged", 60,
+          "emission would be a truncated, non-converged vector")(
+          (Option.empty[Round], false))(_._2, _._1.foreach(_.unpersist())) {
+        case (prev, _) =>
+          val r = step(prev.fold(edges.select(col("src")).distinct()
+            .select(col("src"), lit(1.0).as("qh")))(hubs))
+          (Some(r), prev.exists(p =>
+            r.fp == p.fp && r.ma == p.ma && r.mh == p.mh))
       }
-      require(converged,
-        s"graph_hits_converged: no stationary point in $rounds rounds" +
-          " — emission would be a truncated, non-converged vector")
       // Exact certificate behind the probabilistic fingerprint: one
       // more round must reproduce both sides row-for-row.
-      val cert = step(hubQ)
+      val cert = step(hubs(last))
       def changed(a: DataFrame, b: DataFrame): Long =
         a.select(col("node_id"), col("q").as("qa"))
           .join(b.select(col("node_id"), col("q").as("qb")), "node_id")
@@ -1008,9 +986,9 @@ object Graph {
       // stationarity was MEASURED to be the wrong criterion for the
       // synchronous schedule: the sweep enters a persistent swap limit
       // cycle (~451 nodes at sf0.01, ~4 900 at sf0.1, flat to round
-      // 200 — the AdjLoop6 probe), and an alternating-parity dampener
-      // converges at sf0.01 (52 sub-rounds) but still cycles past 200
-      // at sf0.1; both probed on the %3
+      // 200 — BASELINE.md's round-11 Louvain probe record), and an
+      // alternating-parity dampener converges at sf0.01 (52 sub-rounds)
+      // but still cycles past 200 at sf0.1; both probed on the %3
       // graph). Q, however, rises monotonically and dips exactly once
       // inside the cap at both gate scales — so the Q-monotone rule is both
       // the honest algorithmic contract and a deterministic, bounded
@@ -1035,8 +1013,7 @@ object Graph {
       // window, and Q's two label joins — nothing denser than the
       // edge list, and the driver reads ONE scalar (the round's Q)
       // per sweep. Static tables (adj, deg) persist once; per-round
-      // labels localCheckpoint to keep lineage flat (the ccLabels
-      // necessity measurement).
+      // labels are Fixpoint.checkpoint'ed.
       // %10 witness graph (the graph_clustering_coefficient bound, NOT
       // the step's %3): the iterated sweep pays its stage overhead per
       // ROUND, and the %3 graph's Q ladder runs 23 sweeps at sf0.1 vs
@@ -1290,130 +1267,131 @@ object Graph {
             col("w") * 2).otherwise(col("w")).as("wc"))
         .groupBy(col("a2").as("c_a"), col("b2").as("c_b"))
         .agg(sum(col("wc")).as("w"))
-      var cur = contract(
+      val cur0 = contract(
         und.select(col("u").as("c_a"), col("v").as("c_b"), lit(1L).as("w")),
         lab1).localCheckpoint(eager = true) // many consumers per level
-      var curQ = art.q
-      var compo = lab1 // fine i → community at the current final level
-      var levels = 1
-      var improving = true
-      while (improving && levels < 4) {
-        val adjw = cur.filter(col("c_a") =!= col("c_b"))
-          .select(col("c_a").as("i"), col("c_b").as("j"), col("w"))
-          .unionByName(cur.filter(col("c_a") =!= col("c_b"))
-            .select(col("c_b").as("i"), col("c_a").as("j"), col("w")))
-        val degw = adjw.groupBy("i").agg(sum(col("w")).as("nw"))
-          .join(cur.filter(col("c_a") === col("c_b"))
-            .select(col("c_a").as("i"), col("w").as("sw")), Seq("i"), "full")
-          .select(col("i"),
-            (coalesce(col("nw"), lit(0L)) + coalesce(col("sw"), lit(0L)))
-              .as("ki"),
-            coalesce(col("sw"), lit(0L)).as("sw"))
-          .localCheckpoint(eager = true) // probed every sweep + by Q
-        val m = degw.agg((sum(col("ki")) / 2).cast(LongType))
-          .head().getLong(0) // O(1), once per level
-        // Labeled weighted modularity on the SAME Q scale as the fine
-        // graph: e_c = intra cut-free weight + half the self-loop mass
-        // (exact longs — sw is even by construction), then the fine
-        // term grid verbatim (1e-9 terms, decimal sum, round 6).
-        def qW(lab: DataFrame): Double = {
-          val rolled = degw.join(lab, "i").groupBy("c")
-            .agg(sum(col("ki")).as("d_c"),
-              (sum(col("sw")) / 2).cast(LongType).as("sh"))
-          val intra = cur.filter(col("c_a") =!= col("c_b"))
-            .join(lab.select(col("i").as("c_a"), col("c").as("la")), "c_a")
-            .join(lab.select(col("i").as("c_b"), col("c").as("lb")), "c_b")
-            .filter(col("la") === col("lb"))
-            .groupBy(col("la").as("c")).agg(sum(col("w")).as("iw"))
-          rolled.join(intra, Seq("c"), "left")
-            .select(round(
-              (coalesce(col("iw"), lit(0L)) + col("sh")).cast(DoubleType) /
-                lit(m.toDouble) -
-                (col("d_c").cast(DoubleType) / lit(2.0 * m)) *
-                  (col("d_c").cast(DoubleType) / lit(2.0 * m)), 9).as("term"))
-            .agg(round(sum(col("term").cast(DecimalType(28, 9)))
-              .cast(DoubleType), 6))
-            .head().getDouble(0)
-        }
-        // The weighted sweep with a label TABLE (level2's comparator
-        // generalized past the singleton round).
-        def sweepW(lab: DataFrame): DataFrame = {
-          val kin = adjw.join(lab.select(col("i").as("j"), col("c")), "j")
-            .groupBy("i", "c").agg(sum(col("w")).as("kin"))
-          val stay = degw.join(lab, "i")
-            .select(col("i"), col("c"), lit(0L).as("kin"))
-          val cand = kin.unionByName(stay)
-            .groupBy("i", "c").agg(max(col("kin")).as("kin"))
-          val ktot = degw.join(lab, "i")
-            .groupBy("c").agg(sum(col("ki")).as("ktot"))
-          // Argmax as an aggregate (round 14, guide §2.3 — the
-          // graph_louvain_step rationale).
-          cand.join(ktot, "c")
-            .join(degw.select(col("i"), col("ki")), "i")
-            .join(lab.select(col("i"), col("c").as("c0")), "i")
-            .withColumn("sigma", col("ktot") -
-              when(col("c") === col("c0"), col("ki")).otherwise(lit(0L)))
-            .withColumn("gain", round(
-              col("kin").cast(DoubleType) / lit(m.toDouble) -
-                col("ki").cast(DoubleType) * col("sigma").cast(DoubleType) /
-                  (lit(2.0) * lit(m.toDouble) * lit(m.toDouble)), 9))
-            .groupBy("i")
-            .agg(max(struct(col("gain"), (-col("c")).as("negc"))).as("b"))
-            .select(col("i"), (-col("b.negc")).as("c"))
-        }
-        val singleton = degw.select(col("i"), col("i").as("c"))
-        // Witness (1): the coarsen invariant, loud, per level.
-        val q0 = qW(singleton)
-        require(q0 == curQ,
-          s"graph_louvain_full: contraction broke the modularity " +
-            s"invariant at level $levels (singleton Q=$q0 vs $curQ)")
-        var lab = singleton
-        var q = curQ
-        var labPersisted: DataFrame = null
-        var dipped = false
-        var sweeps = 0
-        while (!dipped && sweeps < 16) {
-          // EAGER: qW(nxt) consumes nxt through multiple sibling plan
-          // branches inside one action — a lazy first materialization
-          // loses the first-compute race and re-runs the sweep subtree
-          // per branch (the measured level2/ce finding; r12 review).
-          val nxt = sweepW(lab).localCheckpoint(eager = true)
-          val qn = qW(nxt)
-          dipped = qn <= q
-          if (!dipped) {
-            if (labPersisted != null) labPersisted.unpersist()
-            labPersisted = nxt; lab = nxt; q = qn
-          } else nxt.unpersist()
-          sweeps += 1
-        }
-        require(dipped, s"graph_louvain_full: level ${levels + 1} inner " +
-          s"sweep still improving after $sweeps rounds (Q=$q) — raise " +
-          "the cap")
-        if (q <= curQ) improving = false // level added nothing: stop
-        else {
-          val prevCompo = compo
-          val prevCur = cur
-          compo = compo
-            .join(lab.select(col("i").as("c"), col("c").as("c2")), "c")
-            .select(col("i"), col("c2").as("c"))
-            .localCheckpoint(eager = true) // node-sized, next level joins it
-          cur = contract(cur, lab).localCheckpoint(eager = true)
-          // Superseded level state released only AFTER the eager
-          // checkpoints above materialized from it.
-          if (prevCompo ne lab1) prevCompo.unpersist()
-          prevCur.unpersist()
-          curQ = q
-          levels += 1
-        }
-        if (labPersisted != null) labPersisted.unpersist()
-        degw.unpersist()
+      // One level of the hierarchy: its coarse graph, Q, the fine node →
+      // community map, the level count, whether the level still
+      // improved Q, and the (graph, map) pair it replaced — released
+      // when this level is superseded, so only AFTER the next level's
+      // eager checkpoints materialized from it (lab1, the artifact's
+      // read-back, is never released).
+      case class Level(cur: DataFrame, q: Double, compo: DataFrame,
+          levels: Int, improving: Boolean,
+          replaced: Option[(DataFrame, DataFrame)])
+      val (last, _) = Fixpoint.run("graph_louvain_full: level loop", 3,
+          "raise the outer cap; truncating would under-report")(
+          Level(cur0, art.q, lab1, 1, improving = true, None))(
+          !_.improving, _.replaced.foreach { case (cur, compo) =>
+            if (compo ne lab1) compo.unpersist()
+            cur.unpersist()
+          }) {
+        case Level(cur, curQ, compo, levels, _, _) =>
+          val adjw = cur.filter(col("c_a") =!= col("c_b"))
+            .select(col("c_a").as("i"), col("c_b").as("j"), col("w"))
+            .unionByName(cur.filter(col("c_a") =!= col("c_b"))
+              .select(col("c_b").as("i"), col("c_a").as("j"), col("w")))
+          val degw = adjw.groupBy("i").agg(sum(col("w")).as("nw"))
+            .join(cur.filter(col("c_a") === col("c_b"))
+              .select(col("c_a").as("i"), col("w").as("sw")), Seq("i"), "full")
+            .select(col("i"),
+              (coalesce(col("nw"), lit(0L)) + coalesce(col("sw"), lit(0L)))
+                .as("ki"),
+              coalesce(col("sw"), lit(0L)).as("sw"))
+            .localCheckpoint(eager = true) // probed every sweep + by Q
+          val m = degw.agg((sum(col("ki")) / 2).cast(LongType))
+            .head().getLong(0) // O(1), once per level
+          // Labeled weighted modularity on the SAME Q scale as the fine
+          // graph: e_c = intra cut-free weight + half the self-loop mass
+          // (exact longs — sw is even by construction), then the fine
+          // term grid verbatim (1e-9 terms, decimal sum, round 6).
+          def qW(lab: DataFrame): Double = {
+            val rolled = degw.join(lab, "i").groupBy("c")
+              .agg(sum(col("ki")).as("d_c"),
+                (sum(col("sw")) / 2).cast(LongType).as("sh"))
+            val intra = cur.filter(col("c_a") =!= col("c_b"))
+              .join(lab.select(col("i").as("c_a"), col("c").as("la")), "c_a")
+              .join(lab.select(col("i").as("c_b"), col("c").as("lb")), "c_b")
+              .filter(col("la") === col("lb"))
+              .groupBy(col("la").as("c")).agg(sum(col("w")).as("iw"))
+            rolled.join(intra, Seq("c"), "left")
+              .select(round(
+                (coalesce(col("iw"), lit(0L)) + col("sh")).cast(DoubleType) /
+                  lit(m.toDouble) -
+                  (col("d_c").cast(DoubleType) / lit(2.0 * m)) *
+                    (col("d_c").cast(DoubleType) / lit(2.0 * m)), 9).as("term"))
+              .agg(round(sum(col("term").cast(DecimalType(28, 9)))
+                .cast(DoubleType), 6))
+              .head().getDouble(0)
+          }
+          // The weighted sweep with a label TABLE (level2's comparator
+          // generalized past the singleton round).
+          def sweepW(lab: DataFrame): DataFrame = {
+            val kin = adjw.join(lab.select(col("i").as("j"), col("c")), "j")
+              .groupBy("i", "c").agg(sum(col("w")).as("kin"))
+            val stay = degw.join(lab, "i")
+              .select(col("i"), col("c"), lit(0L).as("kin"))
+            val cand = kin.unionByName(stay)
+              .groupBy("i", "c").agg(max(col("kin")).as("kin"))
+            val ktot = degw.join(lab, "i")
+              .groupBy("c").agg(sum(col("ki")).as("ktot"))
+            // Argmax as an aggregate (round 14, guide §2.3 — the
+            // graph_louvain_step rationale).
+            cand.join(ktot, "c")
+              .join(degw.select(col("i"), col("ki")), "i")
+              .join(lab.select(col("i"), col("c").as("c0")), "i")
+              .withColumn("sigma", col("ktot") -
+                when(col("c") === col("c0"), col("ki")).otherwise(lit(0L)))
+              .withColumn("gain", round(
+                col("kin").cast(DoubleType) / lit(m.toDouble) -
+                  col("ki").cast(DoubleType) * col("sigma").cast(DoubleType) /
+                    (lit(2.0) * lit(m.toDouble) * lit(m.toDouble)), 9))
+              .groupBy("i")
+              .agg(max(struct(col("gain"), (-col("c")).as("negc"))).as("b"))
+              .select(col("i"), (-col("b.negc")).as("c"))
+          }
+          val singleton = degw.select(col("i"), col("i").as("c"))
+          // Witness (1): the coarsen invariant, loud, per level.
+          val q0 = qW(singleton)
+          require(q0 == curQ,
+            s"graph_louvain_full: contraction broke the modularity " +
+              s"invariant at level $levels (singleton Q=$q0 vs $curQ)")
+          // State: (best labels, their Q, the labels they replaced,
+          // dipped) — trainLouvain10's Q-dip state; the singleton start
+          // is a plain view, never released.
+          val ((lab, q, _, _), _) = Fixpoint.run(
+              s"graph_louvain_full: level ${levels + 1} inner sweep", 16,
+              "raise the cap")(
+              (singleton, curQ, Option.empty[DataFrame], false))(
+              _._4, _._3.foreach(_.unpersist())) {
+            case (lab, q, _, _) =>
+              // EAGER: qW(nxt) consumes nxt through multiple sibling plan
+              // branches inside one action — a lazy first materialization
+              // loses the first-compute race and re-runs the sweep subtree
+              // per branch (the measured level2/ce finding; r12 review).
+              val nxt = sweepW(lab).localCheckpoint(eager = true)
+              val qn = qW(nxt)
+              if (qn > q) (nxt, qn, Some(lab).filter(_ ne singleton), false)
+              else { nxt.unpersist(); (lab, q, None, true) }
+          }
+          val next =
+            if (q <= curQ) // level added nothing: stop
+              Level(cur, curQ, compo, levels, improving = false, None)
+            else {
+              val compo2 = compo
+                .join(lab.select(col("i").as("c"), col("c").as("c2")), "c")
+                .select(col("i"), col("c2").as("c"))
+                .localCheckpoint(eager = true) // node-sized, next level joins
+              Level(contract(cur, lab).localCheckpoint(eager = true), q,
+                compo2, levels + 1, improving = true, Some((cur, compo)))
+            }
+          if (lab ne singleton) lab.unpersist()
+          degw.unpersist()
+          next
       }
-      require(!improving,
-        s"graph_louvain_full: still improving at the $levels-level cap " +
-          "— raise the outer cap; truncating would under-report")
-      cur.unpersist() // the final coarse graph; the emission reads compo
-      compo.select(col("i").as("node_id"), col("c").as("cid"),
-        lit(levels.toLong).as("levels"), lit(curQ).as("q_final"))
+      last.cur.unpersist() // the final coarse graph; the emission reads compo
+      last.compo.select(col("i").as("node_id"), col("c").as("cid"),
+        lit(last.levels.toLong).as("levels"), lit(last.q).as("q_final"))
         .orderBy("node_id")
     },
 
@@ -1545,41 +1523,32 @@ object Graph {
       // count is strictly decreasing until fixpoint). Round count is
       // bounded by the peel cascade depth (measured: 3 rounds at both
       // sf0.01 and sf0.1; %10 witness bound — see graph_triangles).
-      // Same per-round localCheckpoint as ccLabels: truncates the
-      // exponentially re-analyzed lineage. Oracle: the peel UNROLLED 6
-      // times — peeling is idempotent at fixpoint, so any graph that
-      // converges within 6 rounds hash-matches exactly; one that
-      // doesn't fails the gate loudly (the drift alarm we want).
-      var edges = undirectedEdges(s, d, 10)
-        .localCheckpoint(eager = false).persist()
-      var prev = edges.count()
-      var rounds = 0
-      var converged = prev == 0L
-      while (!converged && rounds < 30) {
-        val deg = edges.select(explode(array(col("u"), col("v"))).as("node"))
-          .groupBy("node").agg(count(lit(1)).as("deg"))
-        val keep = deg.filter(col("deg") >= 5).select("node")
-        val next = edges
-          .join(keep.select(col("node").as("u")), "u")
-          .join(keep.select(col("node").as("v")), "v")
-          .select("u", "v")
-          .localCheckpoint(eager = false).persist()
-        val n2 = next.count()
-        converged = n2 == prev
-        prev = n2
-        edges.unpersist()
-        edges = next
-        rounds += 1
+      // Per-round state is Fixpoint.checkpoint'ed. Oracle: the peel
+      // UNROLLED 6 times — peeling is idempotent at fixpoint, so any
+      // graph that converges within 6 rounds hash-matches exactly; one
+      // that doesn't fails the gate loudly (the drift alarm we want).
+      // The cap bounds a broken schedule, not a silent exit: a partial
+      // peel still holds nodes whose degree would drop below k on
+      // further rounds, and the cascade depth is ≤ the node count and
+      // measured at 3 here, so 30 rounds only trips on a genuine bug.
+      val init = Fixpoint.checkpoint(undirectedEdges(s, d, 10))
+      val n0 = init.count()
+      // State: (edges, edge count, count unchanged by the last round);
+      // an empty edge set is already the fixpoint.
+      val ((edges, _, _), _) = Fixpoint.run("graph_k_core: peel", 30,
+          "emission would be a partial peel, not a 5-core")(
+          (init, n0, n0 == 0L))(_._3, _._1.unpersist()) {
+        case (edges, prev, _) =>
+          val deg = edges.select(explode(array(col("u"), col("v"))).as("node"))
+            .groupBy("node").agg(count(lit(1)).as("deg"))
+          val keep = deg.filter(col("deg") >= 5).select("node")
+          val next = Fixpoint.checkpoint(edges
+            .join(keep.select(col("node").as("u")), "u")
+            .join(keep.select(col("node").as("v")), "v")
+            .select("u", "v"))
+          val n2 = next.count()
+          (next, n2, n2 == prev)
       }
-      // A partial peel is NOT a 5-core — it still contains nodes whose
-      // degree would drop below k on further rounds. The cap exists to
-      // bound a broken schedule, not as a silent exit: the peel
-      // cascade depth is ≤ the node count and measured at 3 here, so
-      // 30 rounds only trips on a genuine bug. Fail loudly so a
-      // standalone caller (not just the gate hash) sees it.
-      require(converged,
-        s"graph_k_core: peel did not reach fixpoint in $rounds rounds" +
-          " — emission would be a partial peel, not a 5-core")
       edges.select(explode(array(col("u"), col("v"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("core_deg"))
         .orderBy("node")
@@ -1646,11 +1615,10 @@ object Graph {
       // pointer doubling: a co-occurrence graph's diameter is tiny
       // (measured 3 rounds to fixpoint here); ccLabels documents the
       // doubling variant for long-chain graphs. Per-round driver
-      // traffic is ONE changed-count row (the k_core idiom);
-      // localCheckpoint truncates the per-round lineage growth
-      // (measured exponential analysis cost without it — ccLabels
-      // note). The %10 subgraph bounds the recursive-CTE oracle's
-      // transitive closure, the graph_triangles gate rationale; edges
+      // traffic is ONE violated-edge count row; per-round state is
+      // Fixpoint.checkpoint'ed. The %10 subgraph bounds the
+      // recursive-CTE oracle's transitive closure, the graph_triangles
+      // gate rationale; edges
       // keep only STRONG ties (pairs co-occurring in ≥ 2 distinct
       // orders — the standard co-occurrence significance cut), which
       // both matches how a real community census thresholds noise
@@ -1668,9 +1636,9 @@ object Graph {
           struct(col("v").as("u"), col("u").as("v")))).as("e"))
         .select(col("e.u").as("u"), col("e.v").as("v"))
         .persist() // joined every propagation round
-      var lab = edges.groupBy(col("u").as("id")).agg(min(col("v")).as("mn"))
-        .select(col("id"), least(col("id"), col("mn")).as("lbl"))
-        .localCheckpoint(eager = false).persist()
+      val init = Fixpoint.checkpoint(
+        edges.groupBy(col("u").as("id")).agg(min(col("v")).as("mn"))
+          .select(col("id"), least(col("id"), col("mn")).as("lbl")))
       // Edge-violation fixpoint probe (round 15 — the Cc.minLabel
       // construction and proof): labels converged IFF no edge joins two
       // labels, checkable on the CURRENT table — the old changed-count
@@ -1689,26 +1657,22 @@ object Graph {
           .filter(col("la") =!= col("lb"))
           .agg(count(lit(1))).head().getLong(0)
       }
-      var viol = violations(lab)
-      var rounds = 0
-      while (viol != 0L && rounds < 20) {
-        val prop = edges.join(lab.withColumnRenamed("id", "v2"),
-            edges("v") === col("v2"))
-          .groupBy(col("u").as("id")).agg(min(col("lbl")).as("nbl"))
-        val next = lab
-          .join(prop.withColumnRenamed("id", "id2"),
-            col("id") === col("id2"), "left")
-          .select(col("id"),
-            least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("lbl"))
-          .localCheckpoint(eager = false).persist()
-        viol = violations(next)
-        lab.unpersist()
-        lab = next
-        rounds += 1
+      // State: (labels, violated-edge count). A graph whose first-round
+      // labels already violate no edge runs zero propagation rounds.
+      val ((lab, _), _) = Fixpoint.run("graph_connected_components", 20,
+          "emission would carry stale labels, not components")(
+          (init, violations(init)))(_._2 == 0L, _._1.unpersist()) {
+        case (lab, _) =>
+          val prop = edges.join(lab.withColumnRenamed("id", "v2"),
+              edges("v") === col("v2"))
+            .groupBy(col("u").as("id")).agg(min(col("lbl")).as("nbl"))
+          val next = Fixpoint.checkpoint(lab
+            .join(prop.withColumnRenamed("id", "id2"),
+              col("id") === col("id2"), "left")
+            .select(col("id"),
+              least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("lbl")))
+          (next, violations(next))
       }
-      require(viol == 0L,
-        s"graph_connected_components: no fixpoint in $rounds rounds — " +
-          "emission would carry stale labels, not components")
       lab.groupBy(col("lbl").as("component_id"))
         .agg(count(lit(1)).as("n_nodes"),
           min(col("id")).as("min_node"), max(col("id")).as("max_node"))

@@ -175,18 +175,20 @@ object TextPipeline {
   }
 
   /** Train the first `k` BPE merges on a collapsed (w, c) word table —
-    * bpe_encode's loop, factored so the tokenizer-EVAL operators
-    * (text_tokenizer_fertility) train the identical vocabulary. Each
-    * learned merge gets a fresh control-char placeholder; returns the
-    * rank-ordered (pair, placeholder) list and the placeholder→text
-    * expansion map. One O(1) driver row per round; per-round work is
+    * the loop behind bpe_train_loop, bpe_encode and the tokenizer-EVAL
+    * operators (text_tokenizer_fertility), so all of them train the
+    * identical vocabulary. Each learned merge gets a fresh control-char
+    * placeholder; returns the rank-ordered (pair, placeholder) list, the
+    * placeholder→text expansion map and each merge's weighted pair
+    * count. One O(1) driver row per round; per-round work is
     * vocabulary-bounded (the bpe_train_loop Zipf argument).
     */
   private def bpeTrainMerges(all: DataFrame, k: Int)
-      : (Seq[(String, String)], Map[String, String]) = {
+      : (Seq[(String, String)], Map[String, String], Seq[Long]) = {
     var words = all.filter(length(col("w")) >= 2).persist()
     val exp = scala.collection.mutable.Map[String, String]()
     val merges = scala.collection.mutable.ListBuffer[(String, String)]()
+    val counts = scala.collection.mutable.ListBuffer[Long]()
     var prevWords: DataFrame = null
     for (r <- 1 to k) {
       val top = words.select(explode(expr(
@@ -194,13 +196,19 @@ object TextPipeline {
           .as("pair"), col("c"))
         .groupBy("pair").agg(sum(col("c")).as("n"))
         .orderBy(desc("n"), asc("pair")).limit(1)
-        .head()
+        .head() // the round's ONE job; materializes this round's vocab
+      // This round's vocab is now cached — the parent round's cache is
+      // dead weight from here on (k rounds would otherwise stack k
+      // cached vocab tables for Bench's repeats to multiply).
       if (prevWords != null) prevWords.unpersist()
       prevWords = words
       val pair = top.getString(0)
       val ph = (r + 1).toChar.toString
       exp(ph) = pair.map(ch => exp.getOrElse(ch.toString, ch.toString)).mkString
       merges += ((pair, ph))
+      counts += top.getLong(1)
+      // Column-literal search/replacement strings (never SQL text —
+      // the pair may contain earlier placeholder control chars).
       words = words
         .select(call_function("replace", col("w"), lit(pair), lit(ph)).as("w"),
           col("c"))
@@ -208,7 +216,7 @@ object TextPipeline {
         .persist()
     }
     words.unpersist(); if (prevWords != null) prevWords.unpersist()
-    (merges.toSeq, exp.toMap)
+    (merges.toSeq, exp.toMap, counts.toSeq)
   }
 
   /** Once-per-dataset memo over bpeTrainMerges — the merge list IS the
@@ -221,12 +229,12 @@ object TextPipeline {
     */
   private def bpeTrainMergesMemo(s: SparkSession, d: String,
       all: DataFrame, k: Int)
-      : (Seq[(String, String)], Map[String, String]) =
+      : (Seq[(String, String)], Map[String, String], Seq[Long]) =
     // Single-flight + superseded-fingerprint eviction via
     // ArtifactMemo.once (round 13 — the shared concurrency contract).
     graft.ArtifactMemo.once(artifactKey(d, "documents") + s"#merges$k")(
       bpeTrainMerges(all, k))(
-      (_: (Seq[(String, String)], Map[String, String])) => ())
+      (_: (Seq[(String, String)], Map[String, String], Seq[Long])) => ())
 
   /** The trained merge list for external consumers (the streaming
     * tokenizer twin): same memo, same single-flight training.
@@ -765,40 +773,14 @@ object TextPipeline {
       // path timed as rep1).
       import s.implicits._
       graft.ArtifactMemo.cached(s, artifactKey(d, "documents") + "#bpe12") {
-      var words = documents(s, d)
+      val words = documents(s, d)
         .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
         .filter(length(col("w")) >= 2)
         .groupBy("w").agg(count(lit(1)).as("c"))
-        .persist()
-      val exp = scala.collection.mutable.Map[String, String]()
-      val out = scala.collection.mutable.ListBuffer[(Int, String, Long)]()
-      var prevWords: DataFrame = null
-      for (k <- 1 to 12) {
-        val top = words.select(explode(expr(
-            "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))"))
-            .as("pair"), col("c"))
-          .groupBy("pair").agg(sum(col("c")).as("n"))
-          .orderBy(desc("n"), asc("pair")).limit(1)
-          .head() // the round's ONE job; materializes this round's vocab
-        // This round's vocab is now cached — the parent round's cache
-        // is dead weight from here on (12 rounds would otherwise stack
-        // 12 cached vocab tables for Bench's repeats to multiply).
-        if (prevWords != null) prevWords.unpersist()
-        prevWords = words
-        val pair = top.getString(0)
-        val ph = (k + 1).toChar.toString
-        exp(ph) = pair.map(ch => exp.getOrElse(ch.toString, ch.toString)).mkString
-        out += ((k, exp(ph), top.getLong(1)))
-        // Column-literal search/replacement strings (never SQL text —
-        // the pair may contain earlier placeholder control chars).
-        words = words
-          .select(call_function("replace", col("w"), lit(pair), lit(ph)).as("w"),
-            col("c"))
-          .filter(length(col("w")) >= 2)
-          .persist()
-      }
-      words.unpersist(); if (prevWords != null) prevWords.unpersist()
-      out.toSeq.toDF("rank", "merge", "n").orderBy("rank")
+      val (merges, exp, counts) = bpeTrainMerges(words, 12)
+      merges.zip(counts).zipWithIndex
+        .map { case (((_, ph), n), i) => (i + 1, exp(ph), n) }
+        .toDF("rank", "merge", "n").orderBy("rank")
       }
     },
 
@@ -822,7 +804,7 @@ object TextPipeline {
         .filter(length(col("w")) >= 1)
         .groupBy("w").agg(count(lit(1)).as("c"))
         .persist()
-      val (merges, exp) = bpeTrainMergesMemo(s, d, all, 6)
+      val (merges, exp, _) = bpeTrainMergesMemo(s, d, all, 6)
       val encoded = merges.foldLeft(col("w")) { case (c, (pair, ph)) =>
         call_function("replace", c, lit(pair), lit(ph))
       }
@@ -860,7 +842,7 @@ object TextPipeline {
         .filter(length(col("w")) >= 1)
         .groupBy("w").agg(count(lit(1)).as("c"))
         .persist()
-      val (merges, _) = bpeTrainMergesMemo(s, d, all, 6)
+      val (merges, _, _) = bpeTrainMergesMemo(s, d, all, 6)
       all.unpersist()
       val encoded = merges.foldLeft(col("w")) { case (c, (pair, ph)) =>
         call_function("replace", c, lit(pair), lit(ph))
@@ -902,7 +884,7 @@ object TextPipeline {
         .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
         .filter(length(col("w")) >= 1)
         .groupBy("w").agg(count(lit(1)).as("c"))
-      val (merges, _) = bpeTrainMergesMemo(s, d, all, 6)
+      val (merges, _, _) = bpeTrainMergesMemo(s, d, all, 6)
       val encoded = merges.foldLeft(col("w")) { case (c, (pair, ph)) =>
         call_function("replace", c, lit(pair), lit(ph))
       }

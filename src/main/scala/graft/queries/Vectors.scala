@@ -294,7 +294,7 @@ object Vectors {
   private def trainPqCodebook(slices: DataFrame, K: Int,
       assignRecompute: Map[Int, Seq[(Int, Seq[Float])]] => DataFrame)
       : Seq[(Int, Int, Seq[Float])] = {
-    var cb: Map[Int, Seq[(Int, Seq[Float])]] = slices
+    val cb0: Map[Int, Seq[(Int, Seq[Float])]] = slices
       .filter(col("vec_id") < K)
       .select(col("j"), col("vec_id").cast("int").as("cid"), col("semb"))
       .collect().toSeq
@@ -303,28 +303,22 @@ object Vectors {
         j -> rs.map(r => (r.getInt(1), r.getSeq[Float](2))).toSeq
       }
     slices.persist() // re-scanned every training round
-    var prev: Map[(Int, Int, Int), Double] = null
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < 60) {
-      val rows = assignRecompute(cb).collect()
-      val cur = rows.map(r =>
-        (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(4)).toMap
-      converged = prev != null && cur == prev
-      if (sys.env.contains("SPARK_GRAFT_LOOP_DEBUG") && prev != null)
-        println(s"trainPq round $rounds changed=" +
-          cur.count { case (k, v) => prev.get(k).forall(_ != v) })
-      prev = cur
-      cb = rows.groupBy(_.getInt(0)).map { case (j, rs) =>
-        j -> rs.groupBy(_.getInt(1)).toSeq.map { case (cid, ds) =>
-          (cid, ds.sortBy(_.getInt(2)).map(_.getDouble(4).toFloat).toSeq)
-        }
-      }
-      rounds += 1
+    // State: (codebook, its (j, cid, dim) -> centroid map — None before
+    // the first sweep, stationary). Centroids are 1e-6-quantized, so
+    // the maps compare exactly.
+    val ((cb, _, _), _) = Fixpoint.run("sim_pq_train_converged: codebook",
+        60, "emission would be a mid-descent truncation")(
+        (cb0, Option.empty[Map[(Int, Int, Int), Double]], false))(_._3) {
+      case (cb, prev, _) =>
+        val rows = assignRecompute(cb).collect()
+        val cur = rows.map(r =>
+          (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(4)).toMap
+        (rows.groupBy(_.getInt(0)).map { case (j, rs) =>
+          j -> rs.groupBy(_.getInt(1)).toSeq.map { case (cid, ds) =>
+            (cid, ds.sortBy(_.getInt(2)).map(_.getDouble(4).toFloat).toSeq)
+          }
+        }, Some(cur), prev.contains(cur))
     }
-    require(converged,
-      s"sim_pq_train_converged: codebook not stationary after $rounds " +
-        "sweeps — emission would be a mid-descent truncation")
     slices.unpersist()
     cb.toSeq.flatMap { case (j, ws) =>
       ws.map { case (cid, ce) => (j, cid, ce) }
@@ -982,23 +976,20 @@ object Vectors {
         w.crossJoin(broadcast(norm2))
           .select(col("dim"), round(col("w") / sqrt(col("n2")), 6).as("w_normed"))
       }
-      var v: Seq[Float] = emb.filter(col("vec_id") === 0)
+      val v0: Seq[Float] = emb.filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0)
-      var prev: Map[Int, Double] = null
-      var rounds = 0
-      var converged = false
-      while (!converged && rounds < 60) {
-        val rows = step(v).collect()
-        val cur = rows.map(r => r.getInt(0) -> r.getDouble(1)).toMap
-        converged = prev != null && cur == prev
-        prev = cur
-        v = rows.sortBy(_.getInt(0)).map(_.getDouble(1).toFloat).toSeq
-        rounds += 1
+      // State: (iterate, its dim -> value map — None before the first
+      // round, stationary).
+      val ((v, _, _), _) = Fixpoint.run("feat_pca_power_converged: iterate",
+          60, "emission would be a mid-descent truncation (or a " +
+            "quantized sign-flip limit cycle), not the principal component")(
+          (v0, Option.empty[Map[Int, Double]], false))(_._3) {
+        case (v, prev, _) =>
+          val rows = step(v).collect()
+          val cur = rows.map(r => r.getInt(0) -> r.getDouble(1)).toMap
+          (rows.sortBy(_.getInt(0)).map(_.getDouble(1).toFloat).toSeq,
+            Some(cur), prev.contains(cur))
       }
-      require(converged,
-        s"feat_pca_power_converged: iterate not stationary after $rounds " +
-          "rounds — emission would be a mid-descent truncation (or a " +
-          "quantized sign-flip limit cycle), not the principal component")
       emb.unpersist()
       // Emission re-runs the stationary round as a plain plan — the
       // idempotence that makes the fixed-unroll oracle valid.
@@ -1171,28 +1162,23 @@ object Vectors {
               / count(lit(1)) * 1000000 + 0.5).cast("double") / 1000000.0)
               .as("centroid"))
       }
-      var cents: Seq[(Int, Seq[Float])] = emb.filter(col("vec_id") < 8)
+      val cents0: Seq[(Int, Seq[Float])] = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").cast("int"), col("embedding"))
         .collect().toSeq
         .map(r => (r.getInt(0), r.getSeq[Float](1)))
-      // (cid, dim) -> centroid maps compare exactly: every value is
-      // floor-half-up quantized at 1e-6.
-      var prev: Map[(Int, Int), Double] = null
-      var rounds = 0
-      var converged = false
-      while (!converged && rounds < 40) {
-        val rows = assignRecompute(cents).collect()
-        val cur = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(3)).toMap
-        converged = prev != null && cur == prev
-        prev = cur
-        cents = rows.groupBy(_.getInt(0)).toSeq.map { case (cid, rs) =>
-          (cid, rs.sortBy(_.getInt(1)).map(_.getDouble(3).toFloat).toSeq)
-        }
-        rounds += 1
+      // State: (centroids, their (cid, dim) -> centroid map — None
+      // before the first round, stationary). The maps compare exactly:
+      // every value is floor-half-up quantized at 1e-6.
+      val ((cents, _, _), _) = Fixpoint.run("sim_kmeans_converged: centroids",
+          40, "emission would be a mid-descent truncation, not the fixpoint")(
+          (cents0, Option.empty[Map[(Int, Int), Double]], false))(_._3) {
+        case (cents, prev, _) =>
+          val rows = assignRecompute(cents).collect()
+          val cur = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(3)).toMap
+          (rows.groupBy(_.getInt(0)).toSeq.map { case (cid, rs) =>
+            (cid, rs.sortBy(_.getInt(1)).map(_.getDouble(3).toFloat).toSeq)
+          }, Some(cur), prev.contains(cur))
       }
-      require(converged,
-        s"sim_kmeans_converged: centroids not stationary after $rounds rounds" +
-          " — emission would be a mid-descent truncation, not the fixpoint")
       emb.unpersist()
       // Emission re-runs the stationary round as a plain plan — the
       // idempotence that makes the fixed-unroll oracle valid.

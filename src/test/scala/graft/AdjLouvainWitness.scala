@@ -3,8 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev probe (test scope, AdjLoop convention): tunes the planted
-  * 3-level Louvain hierarchy before pinning it in LouvainWitnessSpec.
+/** Dev probe, kept in test scope like the other Adj* mains (compiled
+  * with the tests so it cannot rot, never shipped in the production
+  * artifact; run via `sbt "Test/runMain graft.AdjLouvainWitness"`):
+  * tunes the planted 3-level Louvain hierarchy before pinning it in
+  * LouvainWitnessSpec (which reuses its edge fixture).
   * Prints what each stage finds so the witness parameters can be
   * adjusted without reverse-engineering the operator's emission.
   */

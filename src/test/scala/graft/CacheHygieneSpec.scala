@@ -48,8 +48,9 @@ class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     "sim_kmeans_converged", "feat_pca_power_converged",
     "bpe_train_loop", "bpe_encode",
     "dedup_clusters", "dedup_minhash", "text_tfidf",
-    "graph_label_prop", "graph_k_core",
-    "graph_louvain_converged", "sim_pq_train_converged", "sim_pq_adc")
+    "graph_label_prop", "graph_k_core", "graph_connected_components",
+    "graph_louvain_converged", "sim_pq_train_converged", "sim_pq_adc",
+    "pipeline_mm_dedup")
 
   test("drain leaves zero persisted blocks after every persist-heavy query") {
     for (name <- heavyCachers) {
